@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Whole-graph analytics over edge frames — extensions beyond the
@@ -16,10 +16,59 @@ import org.apache.spark.sql.functions._
   * iteration is reproducible to the last unit in any SQL engine. The
   * deliberate cost: each division floors away < 1 unit of mass per edge
   * (bounded drift, identical in every engine).
+  *
+  * Key regimes: the PageRank family and HITS run their loops on dense
+  * dictionary ids ([[nodeDict]], prepared once by [[directed]]): their
+  * edge frame is checkpointed once and joined every iteration, so the
+  * narrower long key pays for the dictionary. The relaxation loops
+  * ([[bellmanFord]]) and every undirected loop ([[undirectedEdges]]) stay
+  * on the node strings: dictionary encoding was implemented and measured
+  * for them at bench scale and lost (OPTIMIZATION_r12.md), because the
+  * dictionary and encode boundaries break the single adaptive execution
+  * their per-call edge derivation fuses into. Label propagation and SCC
+  * would also need the order-preserving dictionary, since they compare
+  * labels.
+  *
+  * Materialization: iterative state is materialized with an eager
+  * `localCheckpoint`, not `persist`. The checkpoint runs through AQE, so
+  * small exchanges coalesce instead of pinning the session's shuffle-
+  * partition count the way a cache does (measured 16x task-count inflation
+  * per round with persisted frames), and the next join plans against real
+  * size statistics. It also severs lineage: with plain caching round r+1
+  * still embeds rounds 0..r symbolically, and a cache miss replays the
+  * whole history (measured superlinear on the k-core loop). Superseded
+  * checkpoint blocks are freed by the context cleaner once unreferenced.
   */
 object GraphAlgos {
 
   private val lvlMemDisk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+
+  /** (src, dst[, extra…]) with both endpoints cast to string. */
+  private def stringEdges(edges: DataFrame, srcCol: String, dstCol: String,
+      extra: Column*): DataFrame =
+    edges.select(Seq(col(srcCol).cast("string").as("src"),
+      col(dstCol).cast("string").as("dst")) ++ extra: _*)
+
+  /** Canonical undirected edge set on string keys: one (a, b) row per
+    * unordered pair with a < b — direction and duplicates fold away and
+    * self-loops drop. Null endpoints drop too: `least`/`greatest` skip a
+    * null argument, so an edge with one null endpoint canonicalizes to a
+    * self-loop (two nulls give null) and fails the a ≠ b filter. Callers
+    * choose the materialization (none, persist or checkpoint).
+    */
+  private[graft] def undirectedEdges(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame = {
+    val (s, d) = (col(srcCol).cast("string"), col(dstCol).cast("string"))
+    edges.select(least(s, d).as("a"), greatest(s, d).as("b"))
+      .where(col("a") =!= col("b")).distinct()
+  }
+
+  /** Both orientations (u, v) and (v, u) of a canonical (a, b) frame: the
+    * symmetric adjacency the peeling and voting loops group by `u`.
+    */
+  private def bothDirections(und: DataFrame): DataFrame =
+    und.select(col("a").as("u"), col("b").as("v"))
+      .unionAll(und.select(col("b").as("u"), col("a").as("v")))
 
   /** Order-preserving dense-long dictionary over a distinct single-column
     * `node` frame: node → nid ∈ [0, n) assigned in LEXICOGRAPHIC node
@@ -67,16 +116,6 @@ object GraphAlgos {
       .select(Seq(col("_sid").as("src"), col("_did").as("dst")) ++ others: _*)
   }
 
-  /** Same re-keying for a canonical undirected (a, b[, payload…]) frame. */
-  private[graft] def encodeUnd(und: DataFrame, dict: DataFrame,
-      bcDict: Boolean): DataFrame = {
-    val d = if (bcDict) broadcast(dict) else dict
-    val others = und.columns.filterNot(c => c == "a" || c == "b").map(col)
-    und.join(d.select(col("node").as("a"), col("nid").as("_aid")), Seq("a"))
-      .join(d.select(col("node").as("b"), col("nid").as("_bid")), Seq("b"))
-      .select(Seq(col("_aid").as("a"), col("_bid").as("b")) ++ others: _*)
-  }
-
   /** Decode an id column back to the node string via the dictionary
     * (broadcast-joined when small): replaces `idCol` in place, preserving
     * column order and all other columns.
@@ -92,21 +131,74 @@ object GraphAlgos {
       .select(outCols.toSeq: _*)
   }
 
+  /** A directed edge frame `e` (src, dst[, payload…]) on dictionary ids,
+    * with its dictionary, node count `n`, and whether n-row frames
+    * broadcast (`bc`).
+    */
+  private final case class Directed(dict: DataFrame, n: Long, bc: Boolean,
+      e: DataFrame)
+
+  /** Directed dictionary prep shared by the PageRank family and HITS: the
+    * string edge frame `eStr` (src, dst[, payload…]) is checkpointed, the
+    * node dictionary is built over both endpoints, and the edges are
+    * re-keyed and checkpointed. A null endpoint would become a phantom
+    * null node, counted in `n` and returned as a row, so the dictionary's
+    * null-node count rides the `n` count job via observe and must be 0.
+    * (Observing on the `eStr` checkpoint job instead costs no job either,
+    * but measurably reorders the rows of the dictionary's distinct.)
+    */
+  private def directed(eStr: DataFrame, broadcastNodeLimit: Long,
+      algo: String): Directed = {
+    val s = eStr.localCheckpoint(true)
+    val dict = nodeDict(s.select(col("src").as("node"))
+      .union(s.select(col("dst"))).distinct())
+    val obs = Observation()
+    val n = dict.observe(obs, count_if(col("node").isNull).as("nulls")).count()
+    require(obs.get("nulls").asInstanceOf[Long] == 0L,
+      s"$algo: an edge has a null endpoint")
+    val bc = n <= broadcastNodeLimit
+    Directed(dict, n, bc, encodeEdges(s, dict, bc).localCheckpoint(true))
+  }
+
+  /** The fixed-point PageRank iteration shared by [[pageRankFixed]],
+    * [[weightedPageRankFixed]] and [[personalizedPageRankFixed]]. Per
+    * iteration an n-row share table (rank ⋈ the per-source statistic,
+    * both node-keyed) joins the edge frame ONCE — broadcast when n fits,
+    * so the big edge frame never re-shuffles and the dst sum
+    * partial-combines map-side — and the sums left-join back onto every
+    * node, plus its teleport mass. Callers pass only their arithmetic:
+    * `perSource` aggregates the edges per src (outdeg or wsum), `share`
+    * projects the share table from `rank` and that statistic, `perEdge`
+    * is one edge's contribution, and `init` / `teleport` give a node's
+    * starting rank and per-iteration base.
+    */
+  private def pageRankLoop(g: Directed, iterations: Int, perSource: Column,
+      share: Seq[Column], perEdge: Column, init: Column,
+      teleport: Column): DataFrame = {
+    val stat = g.e.groupBy("src").agg(perSource).localCheckpoint(true)
+    val nodes = g.dict.select(col("nid").as("node"))
+    var ranks = nodes.withColumn("rank", init)
+    for (_ <- 1 to iterations) {
+      val shares = ranks.withColumnRenamed("node", "src").join(stat, Seq("src"))
+        .select(col("src") +: share: _*)
+      val contrib = g.e.join(if (g.bc) broadcast(shares) else shares, Seq("src"))
+        .groupBy(col("dst").as("node")).agg(sum(perEdge).as("m"))
+      ranks = nodes.join(contrib, Seq("node"), "left")
+        .select(col("node"), (teleport + coalesce(col("m"), lit(0L))).as("rank"))
+        .localCheckpoint(true)
+    }
+    decodeNode(ranks, g.dict, "node", g.bc)
+  }
+
   /** Fixed-point PageRank: `iterations` synchronous updates of
     * rank(v) = base + Σ_{u→v} (rank(u)·damping÷100)÷outdeg(u), all in
     * integer micro-units of `scale` total mass. Dangling-node mass is
     * dropped (the standard simplification); `base` is the uniform
     * teleport share (scale÷n)·(100−damping)÷100.
     *
-    * Scale shape: one distinct + count for the node set, a degree groupBy,
-    * then per iteration ONE pass over the edges — the per-source outflow
-    * share (rank·damping÷100÷outdeg) is precomputed as an n-row table
-    * (rank ⋈ degree, both keyed by node) and joined to the edges once;
-    * when n fits the broadcast budget (`broadcastNodeLimit`) that join is
-    * a broadcast, so the big edge frame never re-shuffles across
-    * iterations and the dst aggregation partial-combines map-side. Each
-    * iteration's rank frame is persisted so the lineage stays flat (the
-    * iterated-join anti-pattern at scale is lineage blowup, not the joins).
+    * Scale shape: the distinct edge set and the node dictionary once, a
+    * degree groupBy, then per iteration ONE pass over the edges
+    * ([[pageRankLoop]]).
     */
   def pageRankFixed(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int, dampingPct: Int = 85,
@@ -114,52 +206,13 @@ object GraphAlgos {
       broadcastNodeLimit: Long = 1000000L): DataFrame = {
     require(iterations >= 1, "need at least one iteration")
     require(dampingPct >= 0 && dampingPct <= 100, "dampingPct in [0,100]")
-    // eager localCheckpoint, NOT persist: the checkpoint materializes
-    // through AQE (small exchanges coalesce instead of pinning the
-    // session's shuffle-partition count the way a cache does — measured
-    // 16x task-count inflation per round when these frames were persisted)
-    // and exposes REAL size statistics to downstream join planning
-    val eStr = edges.select(col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst")).distinct()
-      .localCheckpoint(true)
-    // dictionary-encode node keys to dense longs for the loop (see
-    // nodeDict): the equality-only iteration is invariant under any key
-    // bijection, so running it on 8-byte ids and decoding the output is
-    // result-identical while every per-iteration exchange narrows
-    val dict = nodeDict(eStr.select(col("src").as("node"))
-      .union(eStr.select(col("dst"))).distinct())
-    val n = dict.count()
-    val bc = n <= broadcastNodeLimit
-    val e = encodeEdges(eStr, dict, bc).localCheckpoint(true)
-    val nodes = dict.select(col("nid").as("node"))
-    val init = scale / n
+    val g = directed(stringEdges(edges, srcCol, dstCol).distinct(),
+      broadcastNodeLimit, "pageRankFixed")
+    val init = scale / g.n
     val base = (init * (100L - dampingPct)) / 100L
-    val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      .localCheckpoint(true)
-    var ranks = nodes.withColumn("rank", lit(init))
-    for (_ <- 1 to iterations) {
-      // n-row share table first (rank ⋈ degree are both node-keyed), then
-      // ONE join against the big edge frame — broadcast below the limit
-      val share = ranks.withColumnRenamed("node", "src").join(deg, Seq("src"))
-        .select(col("src"),
-          expr(s"(rank * $dampingPct div 100) div outdeg").as("m"))
-      val shareSide = if (bc) broadcast(share) else share
-      val contrib = e.join(shareSide, Seq("src"))
-        .groupBy(col("dst").as("node")).agg(sum(col("m")).as("m"))
-      // localCheckpoint (eager), not persist: caching keeps the symbolic
-      // plan of every earlier iteration inside the new frame, and a cache
-      // miss (or any post-loop aggregate after unpersist) replays the full
-      // iteration history — measured superlinear on the k-core loop.
-      // Checkpointing materializes AND severs lineage; superseded blocks
-      // are freed by the context cleaner when unreferenced.
-      ranks = nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (lit(base) + coalesce(col("m"), lit(0L))).as("rank"))
-        .localCheckpoint(true)
-    }
-    // checkpoint blocks free via the context cleaner once unreferenced —
-    // no explicit unpersist needed for eStr/e/deg
-    decodeNode(ranks, dict, "node", bc)
+    pageRankLoop(g, iterations, count(lit(1)).as("outdeg"),
+      Seq(expr(s"(rank * $dampingPct div 100) div outdeg").as("m")), col("m"),
+      lit(init), lit(base))
   }
 
   /** Weighted PageRank: [[pageRankFixed]] with per-edge weights — each
@@ -180,39 +233,16 @@ object GraphAlgos {
       broadcastNodeLimit: Long = 1000000L): DataFrame = {
     require(iterations >= 1, "need at least one iteration")
     require(dampingPct >= 0 && dampingPct <= 100, "dampingPct in [0,100]")
-    // eager localCheckpoint, not persist — see pageRankFixed
-    val eStr = edges.select(col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst"),
-      col(weightCol).cast("long").as("w"))
-      .groupBy("src", "dst").agg(sum(col("w")).as("w"))
-      .where(col("w") > 0)
-      .localCheckpoint(true)
-    // long-keyed loop via the node dictionary — see pageRankFixed
-    val dict = nodeDict(eStr.select(col("src").as("node"))
-      .union(eStr.select(col("dst"))).distinct())
-    val n = dict.count()
-    val bc = n <= broadcastNodeLimit
-    val e = encodeEdges(eStr, dict, bc).localCheckpoint(true)
-    val nodes = dict.select(col("nid").as("node"))
-    val init = scale / n
+    val g = directed(
+      stringEdges(edges, srcCol, dstCol, col(weightCol).cast("long").as("w"))
+        .groupBy("src", "dst").agg(sum(col("w")).as("w"))
+        .where(col("w") > 0),
+      broadcastNodeLimit, "weightedPageRankFixed")
+    val init = scale / g.n
     val base = (init * (100L - dampingPct)) / 100L
-    val wsum = e.groupBy("src").agg(sum(col("w")).as("wsum"))
-      .localCheckpoint(true)
-    var ranks = nodes.withColumn("rank", lit(init))
-    for (_ <- 1 to iterations) {
-      val share = ranks.withColumnRenamed("node", "src").join(wsum, Seq("src"))
-        .select(col("src"), expr(s"(rank * $dampingPct) div 100").as("t"),
-          col("wsum"))
-      val shareSide = if (bc) broadcast(share) else share
-      val contrib = e.join(shareSide, Seq("src"))
-        .select(col("dst"), expr("(t * w) div wsum").as("m"))
-        .groupBy(col("dst").as("node")).agg(sum(col("m")).as("m"))
-      ranks = nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (lit(base) + coalesce(col("m"), lit(0L))).as("rank"))
-        .localCheckpoint(true)
-    }
-    decodeNode(ranks, dict, "node", bc)
+    pageRankLoop(g, iterations, sum(col("w")).as("wsum"),
+      Seq(expr(s"(rank * $dampingPct) div 100").as("t"), col("wsum")),
+      expr("(t * w) div wsum"), lit(init), lit(base))
   }
 
   /** DuckDB replay of [[weightedPageRankFixed]], iterations unrolled. */
@@ -250,8 +280,7 @@ object GraphAlgos {
     * local-graph-feature primitive.
     *
     * Same scale shape and determinism contract as [[pageRankFixed]]
-    * (n-row share table joined once per iteration against the edge
-    * frame, integer micro-units, per-iteration localCheckpoint).
+    * ([[pageRankLoop]]).
     */
   def personalizedPageRankFixed(edges: DataFrame, srcCol: String,
       dstCol: String, seeds: Seq[String], iterations: Int,
@@ -260,45 +289,78 @@ object GraphAlgos {
     require(iterations >= 1, "need at least one iteration")
     require(seeds.nonEmpty, "need at least one seed")
     require(dampingPct >= 0 && dampingPct <= 100, "dampingPct in [0,100]")
-    // eager localCheckpoint, not persist — see pageRankFixed
-    val eStr = edges.select(col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst")).distinct()
-      .localCheckpoint(true)
-    // long-keyed loop via the node dictionary — see pageRankFixed. The
-    // seed membership test becomes an isin over the seeds' dictionary ids
-    // (a |seeds|-row metadata lookup, like the existing n count — seeds
-    // absent from the graph simply match nothing, exactly as before).
-    val dict = nodeDict(eStr.select(col("src").as("node"))
-      .union(eStr.select(col("dst"))).distinct())
-    val n = dict.count()
-    val bc = n <= broadcastNodeLimit
-    val e = encodeEdges(eStr, dict, bc).localCheckpoint(true)
-    val nodes = dict.select(col("nid").as("node"))
+    val g = directed(stringEdges(edges, srcCol, dstCol).distinct(),
+      broadcastNodeLimit, "personalizedPageRankFixed")
     val init = scale / seeds.length
     val base = (init * (100L - dampingPct)) / 100L
-    val seedIds = dict.where(col("node").isin(seeds: _*))
+    // seed membership is an isin over the seeds' dictionary ids (a
+    // |seeds|-row lookup, like the n count); seeds absent from the graph
+    // match nothing
+    val seedIds = g.dict.where(col("node").isin(seeds: _*))
       .select("nid").collect().map(_.getLong(0)).toSeq
     val isSeed =
       if (seedIds.isEmpty) lit(false) else col("node").isin(seedIds: _*)
-    val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      .localCheckpoint(true)
-    var ranks = nodes.withColumn("rank",
-      when(isSeed, lit(init)).otherwise(lit(0L)))
-    for (_ <- 1 to iterations) {
-      val share = ranks.withColumnRenamed("node", "src").join(deg, Seq("src"))
-        .select(col("src"),
-          expr(s"(rank * $dampingPct div 100) div outdeg").as("m"))
-      val shareSide = if (bc) broadcast(share) else share
-      val contrib = e.join(shareSide, Seq("src"))
-        .groupBy(col("dst").as("node")).agg(sum(col("m")).as("m"))
-      ranks = nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (when(isSeed, lit(base)).otherwise(lit(0L)) +
-            coalesce(col("m"), lit(0L))).as("rank"))
-        .localCheckpoint(true)
-    }
-    decodeNode(ranks, dict, "node", bc)
+    pageRankLoop(g, iterations, count(lit(1)).as("outdeg"),
+      Seq(expr(s"(rank * $dampingPct div 100) div outdeg").as("m")), col("m"),
+      when(isSeed, lit(init)).otherwise(lit(0L)),
+      when(isSeed, lit(base)).otherwise(lit(0L)))
   }
+
+  /** Bellman-Ford relaxation shared by [[shortestPathsFixed]],
+    * [[multiSourceShortestPaths]] and [[temporalReachability]]: `maxHops`
+    * synchronous rounds over a state frame keyed by `keys` (one of them
+    * `node`) with one `value` per key; each round takes
+    * min(`value`) per key over state ∪ relax(e ⋈ state). The edge frame
+    * `e` (src, dst, payload…) is persisted for the loop; the relax join
+    * ([[relaxJoin]]) broadcasts the state while its row count fits
+    * `broadcastRowLimit`, so the edges never re-shuffle. Each round's row
+    * count, and its count of null nodes, ride the checkpoint job via
+    * observe (`<obsPrefix>_rows_<round>`) instead of a count() job. A null
+    * node means a reachable edge has a null dst, and fails the call.
+    */
+  private def bellmanFord(e: DataFrame, init: DataFrame, initRows: Long,
+      keys: Seq[String], value: String, maxHops: Int, broadcastRowLimit: Long,
+      obsPrefix: String)(relax: DataFrame => DataFrame): DataFrame = {
+    val edgesCached = e.persist(lvlMemDisk)
+    var state = init
+    var rows = initRows
+    for (r <- 1 to maxHops) {
+      val obs = Observation(s"${obsPrefix}_rows_$r")
+      state = state
+        .unionByName(relax(relaxJoin(edgesCached, state, rows, broadcastRowLimit)))
+        .groupBy(keys.map(col): _*).agg(min(value).as(value))
+        .observe(obs, count(lit(1)).as("rows"),
+          count_if(col("node").isNull).as("nulls"))
+        .localCheckpoint(true)
+      rows = obs.get("rows").asInstanceOf[Long]
+      require(obs.get("nulls").asInstanceOf[Long] == 0L,
+        s"$obsPrefix round $r relaxed onto a null node: a reachable edge has a null dst")
+    }
+    edgesCached.unpersist(blocking = false)
+    state
+  }
+
+  /** The relax join of one [[bellmanFord]] round: edges ⋈ state on
+    * src = node, the state broadcast while `rows` fits the limit.
+    */
+  private def relaxJoin(e: DataFrame, state: DataFrame, rows: Long,
+      broadcastRowLimit: Long): DataFrame = {
+    val side = if (rows <= broadcastRowLimit) broadcast(state) else state
+    e.join(side.withColumnRenamed("node", "src"), Seq("src"))
+  }
+
+  /** Shortest-path relax step: each joined edge offers its dst at
+    * dist + w, carrying the `carry` key columns along.
+    */
+  private def plusWeight(carry: String*)(joined: DataFrame): DataFrame =
+    joined.select(carry.map(col) ++
+      Seq(col("dst").as("node"), (col("dist") + col("w")).as("dist")): _*)
+
+  /** (src, dst, w) with parallel edges collapsed to the lightest. */
+  private def lightestEdges(edges: DataFrame, srcCol: String, dstCol: String,
+      weightCol: String): DataFrame =
+    stringEdges(edges, srcCol, dstCol, col(weightCol).cast("long").as("w"))
+      .groupBy("src", "dst").agg(min("w").as("w"))
 
   /** Weighted single-source shortest paths, `maxHops` synchronous
     * Bellmann-Ford relaxation rounds: dist(v) = min(dist(v), min over
@@ -309,10 +371,9 @@ object GraphAlgos {
     *
     * Scale shape: per round ONE keyed join of the current frontier-
     * inclusive distance table against the edges plus a map-side-combinable
-    * min groupBy; the distance table is node-keyed (≤ n rows), broadcast
-    * under `broadcastNodeLimit`, so the edge frame never re-shuffles.
-    * Each round persists and drops the superseded cache — flat lineage,
-    * O(1) cached frames. Rounds are a hard cap (the reference's traversal
+    * min groupBy ([[bellmanFord]]); the distance table is node-keyed
+    * (≤ n rows), broadcast under `broadcastNodeLimit`, so the edge frame
+    * never re-shuffles. Rounds are a hard cap (the reference's traversal
     * hop caps, query/caps.py) — at diameter convergence extra rounds are
     * no-ops but still cost a pass; choose maxHops accordingly.
     */
@@ -322,46 +383,19 @@ object GraphAlgos {
     require(maxHops >= 1, "need at least one hop")
     val spark = edges.sparkSession
     import spark.implicits._
-    // NOTE (round 12): dictionary-encoding this loop's node keys was
-    // implemented and A/B-measured — it LOST locally (the per-query edge
-    // derivation used to fuse into one adaptive execution; the dict +
-    // encode boundaries cost more than narrow keys save at bench scale) —
-    // so the loop stays string-keyed; only the per-round count() job was
-    // folded into the checkpoint via observe. See OPTIMIZATION_r12.md.
-    val e = edges.select(col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst"),
-      col(weightCol).cast("long").as("w"))
-      .groupBy("src", "dst").agg(min("w").as("w")) // parallel edges: keep lightest
-      .persist(lvlMemDisk)
-    var dist = Seq((source, 0L)).toDF("node", "dist")
-    var distRows = 1L // known: the seed row (the observed checkpoint count
-    for (r <- 1 to maxHops) { // below keeps this exact every later round)
-      // localCheckpoint severs the per-round lineage (see pageRankFixed);
-      // the row count rides the SAME materialization job via observe
-      // instead of a separate count() job per round
-      val obs = org.apache.spark.sql.Observation(s"sssp_rows_$r")
-      dist = dist.unionByName(relaxRound(e, dist, distRows, broadcastNodeLimit))
-        .groupBy("node").agg(min("dist").as("dist"))
-        .observe(obs, count(lit(1)).as("rows"))
-        .localCheckpoint(true)
-      distRows = obs.get("rows").asInstanceOf[Long]
-    }
-    e.unpersist(blocking = false)
-    dist
+    bellmanFord(lightestEdges(edges, srcCol, dstCol, weightCol),
+      Seq((source, 0L)).toDF("node", "dist"), 1L, Seq("node"), "dist",
+      maxHops, broadcastNodeLimit, "sssp")(plusWeight())
   }
 
-  /** One Bellman-Ford relaxation: the node-keyed distance table joins the
-    * edge frame, broadcast while it fits — exposed package-private so
-    * `PlanAssertSpec` can assert the loop's plan invariants (distance side
-    * broadcast under the limit, no Exchange on the cached edge side)
-    * without executing the loop.
+  /** One SSSP relaxation ([[relaxJoin]] + [[plusWeight]]) — exposed
+    * package-private so `PlanAssertSpec` can assert the loop's plan
+    * invariants (distance side broadcast under the limit, no Exchange on
+    * the cached edge side) without executing the loop.
     */
   private[graft] def relaxRound(e: DataFrame, dist: DataFrame, distRows: Long,
-      broadcastNodeLimit: Long): DataFrame = {
-    val distSide = if (distRows <= broadcastNodeLimit) broadcast(dist) else dist
-    e.join(distSide.withColumnRenamed("node", "src"), Seq("src"))
-      .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-  }
+      broadcastNodeLimit: Long): DataFrame =
+    plusWeight()(relaxJoin(e, dist, distRows, broadcastNodeLimit))
 
   /** DuckDB-dialect oracle for [[shortestPathsFixed]]: rounds unrolled as
     * chained CTEs over the same integer arithmetic (kept beside the
@@ -396,10 +430,8 @@ object GraphAlgos {
     * later one usable), so the edge frame dedups on (src, dst, t), not
     * (src, dst).
     *
-    * Scale shape: per round one keyed join of the edge frame against the
-    * (broadcast-small until it isn't) arrival table + one min groupBy;
-    * `localCheckpoint` severs per-round lineage like the other fixed-point
-    * loops.
+    * Scale shape: the [[bellmanFord]] rounds, keyed on node with the
+    * arrival time as the value.
     */
   def temporalReachability(edges: DataFrame, srcCol: String, dstCol: String,
       tsCol: String, source: String, startTime: Long, maxHops: Int,
@@ -407,31 +439,13 @@ object GraphAlgos {
     require(maxHops >= 1, "need at least one hop")
     val spark = edges.sparkSession
     import spark.implicits._
-    // string-keyed (dictionary encoding measured and rejected — see
-    // shortestPathsFixed note); per-round count() folded into the
-    // checkpoint via observe
-    val e = edges.select(col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst"),
-      col(tsCol).cast("long").as("t"))
-      .distinct()
-      .persist(lvlMemDisk)
-    var arr = Seq((source, startTime)).toDF("node", "arrival")
-    var arrRows = 1L
-    for (r <- 1 to maxHops) {
-      val arrSide = if (arrRows <= broadcastNodeLimit) broadcast(arr) else arr
-      val relaxed = e.join(arrSide.withColumnRenamed("node", "src"), Seq("src"))
-        .where(col("t") >= col("arrival"))
-        .select(col("dst").as("node"), col("t").as("arrival"))
-      // row count observed on the checkpoint job — no separate count()
-      val obs = org.apache.spark.sql.Observation(s"treach_rows_$r")
-      arr = arr.unionByName(relaxed)
-        .groupBy("node").agg(min("arrival").as("arrival"))
-        .observe(obs, count(lit(1)).as("rows"))
-        .localCheckpoint(true)
-      arrRows = obs.get("rows").asInstanceOf[Long]
-    }
-    e.unpersist(blocking = false)
-    arr
+    bellmanFord(
+      stringEdges(edges, srcCol, dstCol, col(tsCol).cast("long").as("t"))
+        .distinct(),
+      Seq((source, startTime)).toDF("node", "arrival"), 1L, Seq("node"),
+      "arrival", maxHops, broadcastNodeLimit, "treach")(
+      _.where(col("t") >= col("arrival"))
+        .select(col("dst").as("node"), col("t").as("arrival")))
   }
 
   /** DuckDB replay of [[temporalReachability]], rounds unrolled. */
@@ -512,9 +526,9 @@ object GraphAlgos {
     // sym feeds deg AND the paired join (deg twice more) — without a
     // persist the upstream edge derivation re-runs per branch
     val sym = und.unionAll(und.select(col("_b").as("_a"), col("_a").as("_b")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(lvlMemDisk)
     val deg = sym.groupBy(col("_a").as("_n")).agg(count(lit(1)).as("_d"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(lvlMemDisk)
     val paired = sym
       .join(deg.select(col("_n").as("_a"), col("_d").as("_x")), Seq("_a"))
       .join(deg.select(col("_n").as("_b"), col("_d").as("_y")), Seq("_b"))
@@ -557,20 +571,6 @@ object GraphAlgos {
        |FROM ag""".stripMargin
   }
 
-  /** Per-node triangle participation counts over an undirected graph given
-    * as a directed edge frame (direction and duplicates are normalized
-    * away; self-loops dropped).
-    *
-    * The join is DEGREE-ORDERED — each undirected edge is oriented from
-    * its lower-(degree, node) endpoint to the higher one, and wedges are
-    * built only from a node's outgoing oriented edges. Every triangle is
-    * then found exactly once, and no node fans out more than O(√m)
-    * oriented edges regardless of raw degree — the standard bound that
-    * keeps the wedge join at O(m^1.5) total instead of Σ deg² (a celebrity
-    * node with degree 10⁶ would otherwise mint 10¹² wedge candidates).
-    * The wedge→closing-edge probe is an equi-join on the oriented edge
-    * set itself.
-    */
   /** Degree-ordered orientation of a canonical undirected edge frame
     * (columns `a` < `b`): each edge oriented `lo → hi` from its
     * lower-(deg, node) endpoint, both endpoints joined against the
@@ -593,28 +593,40 @@ object GraphAlgos {
         when(lowFirst, col("b")).otherwise(col("a")).as("hi"))
   }
 
-  def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    // string-keyed (dictionary encoding measured and rejected — see kCore)
-    val und = edges.select(
-      least(col(srcCol).cast("string"), col(dstCol).cast("string")).as("a"),
-      greatest(col(srcCol).cast("string"), col(dstCol).cast("string")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-    val o = orientByDegree(und)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // wedges from a common low endpoint; u < v in oriented order kills the
-    // (u,v)/(v,u) mirror so each triangle closes once
-    val wedges = o.select(col("lo"), col("hi").as("u"))
+  /** Every triangle of an [[orientByDegree]] frame exactly once, as
+    * (u, v, lo): wedges from a common low endpoint with u < v (which kills
+    * the (u,v)/(v,u) mirror), closed by the edge {u, v} probed in both
+    * orientations (positional union: (u, v) column order in BOTH legs).
+    */
+  private def orientedTriangles(o: DataFrame): DataFrame =
+    o.select(col("lo"), col("hi").as("u"))
       .join(o.select(col("lo"), col("hi").as("v")), Seq("lo"))
       .where(col("u") < col("v"))
-    // the closing edge {u, v} may be oriented either way — probe both
-    // directions (positional union: keep (u, v) column order in BOTH legs)
-    val tri = wedges.join(
-      o.select(col("lo").as("u"), col("hi").as("v"))
+      .join(o.select(col("lo").as("u"), col("hi").as("v"))
         .unionAll(o.select(col("hi").as("u"), col("lo").as("v"))),
-      Seq("u", "v"))
-    val out = tri.select(explode(array(col("lo"), col("u"), col("v"))).as("node"))
+        Seq("u", "v"))
+
+  /** Per-node triangle participation counts over an undirected graph given
+    * as a directed edge frame (direction and duplicates are normalized
+    * away; self-loops dropped).
+    *
+    * The join is DEGREE-ORDERED — each undirected edge is oriented from
+    * its lower-(degree, node) endpoint to the higher one, and wedges are
+    * built only from a node's outgoing oriented edges. Every triangle is
+    * then found exactly once, and no node fans out more than O(√m)
+    * oriented edges regardless of raw degree — the standard bound that
+    * keeps the wedge join at O(m^1.5) total instead of Σ deg² (a celebrity
+    * node with degree 10⁶ would otherwise mint 10¹² wedge candidates).
+    * The wedge→closing-edge probe is an equi-join on the oriented edge
+    * set itself.
+    */
+  def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
+    val o = orientByDegree(undirectedEdges(edges, srcCol, dstCol))
+      .persist(lvlMemDisk)
+    val out = orientedTriangles(o)
+      .select(explode(array(col("lo"), col("u"), col("v"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("triangles"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(lvlMemDisk)
     out.count(): Unit // materialize before dropping the oriented cache
     o.unpersist(blocking = false)
     out
@@ -642,7 +654,7 @@ object GraphAlgos {
     // it once instead of re-running the distinct + per-r rank twice
     val capped = d.withColumn("_rk", row_number().over(w))
       .where(col("_rk") <= maxPerRight).drop("_rk")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(lvlMemDisk)
     capped.as("x").join(capped.as("y"),
       col("x.r") === col("y.r") && col("x.l") < col("y.l"))
       .groupBy(col("x.l").as("a"), col("y.l").as("b"))
@@ -663,31 +675,11 @@ object GraphAlgos {
     require(maxHops >= 1, "need at least one hop")
     val spark = edges.sparkSession
     import spark.implicits._
-    // string-keyed (dictionary encoding measured and rejected — see
-    // shortestPathsFixed note); per-round count() folded into the
-    // checkpoint via observe
-    val e = edges.select(col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst"),
-      col(weightCol).cast("long").as("w"))
-      .groupBy("src", "dst").agg(min("w").as("w"))
-      .persist(lvlMemDisk)
-    var dist = seeds.distinct.map(s => (s, s, 0L)).toDF("seed", "node", "dist")
-    var distRows = seeds.distinct.size.toLong
-    for (r <- 1 to maxHops) {
-      val side = if (distRows <= broadcastRowLimit) broadcast(dist) else dist
-      val relaxed = e.join(side.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("seed"), col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-      // localCheckpoint severs the per-round lineage (see pageRankFixed);
-      // the row count rides the checkpoint job via observe
-      val obs = org.apache.spark.sql.Observation(s"mssp_rows_$r")
-      dist = dist.unionByName(relaxed)
-        .groupBy("seed", "node").agg(min("dist").as("dist"))
-        .observe(obs, count(lit(1)).as("rows"))
-        .localCheckpoint(true)
-      distRows = obs.get("rows").asInstanceOf[Long]
-    }
-    e.unpersist(blocking = false)
-    dist
+    val seedSet = seeds.distinct
+    bellmanFord(lightestEdges(edges, srcCol, dstCol, weightCol),
+      seedSet.map(s => (s, s, 0L)).toDF("seed", "node", "dist"),
+      seedSet.size.toLong, Seq("seed", "node"), "dist", maxHops,
+      broadcastRowLimit, "mssp")(plusWeight("seed"))
   }
 
   /** Harmonic centrality from a seed sample: `Σ_seeds 1/d(seed, v)` over
@@ -743,21 +735,7 @@ object GraphAlgos {
       maxRounds: Int): DataFrame = {
     require(k >= 1, "k must be positive")
     require(maxRounds >= 1, "need at least one round")
-    // string-keyed (dictionary encoding measured and rejected — the dict
-    // and encode boundaries broke the single adaptive execution this
-    // per-query edge derivation fuses into; see OPTIMIZATION_r12.md)
-    val und0 = edges.select(
-      least(col(srcCol).cast("string"), col(dstCol).cast("string")).as("a"),
-      greatest(col(srcCol).cast("string"), col(dstCol).cast("string")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-    // localCheckpoint (eager) rather than persist: each round's frame is
-    // MATERIALIZED AND ITS LINEAGE SEVERED. With plain caching the round
-    // r+1 plan still embeds rounds 0..r symbolically — any cache miss (or
-    // the final aggregate after unpersist) replays the whole iteration
-    // history, and the broadcast-subquery plans defeat fragment reuse —
-    // measured as superlinear per-round cost on this very loop.
-    var e = und0.select(col("a").as("u"), col("b").as("v"))
-      .unionAll(und0.select(col("b").as("u"), col("a").as("v")))
+    var e = bothDirections(undirectedEdges(edges, srcCol, dstCol))
       .localCheckpoint(true)
     var round = 0
     var stable = false
@@ -825,27 +803,12 @@ object GraphAlgos {
       maxRounds: Int): DataFrame = {
     require(k >= 3, "k must be >= 3")
     require(maxRounds >= 1, "need at least one round")
-    // string-keyed (dictionary encoding measured and rejected — see kCore)
-    var e = edges.select(
-      least(col(srcCol).cast("string"), col(dstCol).cast("string")).as("a"),
-      greatest(col(srcCol).cast("string"), col(dstCol).cast("string")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-      .localCheckpoint(true)
+    var e = undirectedEdges(edges, srcCol, dstCol).localCheckpoint(true)
     // returns (support frame, oriented-edge cache): the caller unpersists
     // the cache once the support consumer is materialized
     def support(cur: DataFrame): (DataFrame, DataFrame) = {
-      val o = orientByDegree(cur)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // wedges from a common low endpoint; u < v kills the (u,v)/(v,u)
-      // mirror; the closing edge {u, v} may be oriented either way
-      val wedges = o.select(col("lo"), col("hi").as("u"))
-        .join(o.select(col("lo"), col("hi").as("v")), Seq("lo"))
-        .where(col("u") < col("v"))
-      val tri = wedges.join(
-        o.select(col("lo").as("u"), col("hi").as("v"))
-          .unionAll(o.select(col("hi").as("u"), col("lo").as("v"))),
-        Seq("u", "v"))
-      val sup = tri.select(explode(array(
+      val o = orientByDegree(cur).persist(lvlMemDisk)
+      val sup = orientedTriangles(o).select(explode(array(
         struct(least(col("lo"), col("u")).as("a"),
           greatest(col("lo"), col("u")).as("b")),
         struct(least(col("lo"), col("v")).as("a"),
@@ -948,13 +911,7 @@ object GraphAlgos {
       rounds: Int): DataFrame = {
     require(rounds >= 1, "need at least one round")
     import org.apache.spark.sql.expressions.Window
-    // string-keyed (dictionary encoding measured and rejected — see kCore)
-    val und0 = edges.select(
-      least(col(srcCol).cast("string"), col(dstCol).cast("string")).as("a"),
-      greatest(col(srcCol).cast("string"), col(dstCol).cast("string")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-    val e = und0.select(col("a").as("u"), col("b").as("v"))
-      .unionAll(und0.select(col("b").as("u"), col("a").as("v")))
+    val e = bothDirections(undirectedEdges(edges, srcCol, dstCol))
       .localCheckpoint(true)
     var h = e.groupBy(col("u").as("node")).agg(count(lit(1)).as("h"))
       .localCheckpoint(true)
@@ -1009,15 +966,7 @@ object GraphAlgos {
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int): DataFrame = {
     require(rounds >= 1, "need at least one round")
-    // string-keyed (dictionary encoding measured and rejected — see kCore;
-    // note LPA would additionally need the ORDER-PRESERVING dictionary,
-    // since its tie-break is the smallest label)
-    val und0 = edges.select(
-      least(col(srcCol).cast("string"), col(dstCol).cast("string")).as("a"),
-      greatest(col(srcCol).cast("string"), col(dstCol).cast("string")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-    val e = und0.select(col("a").as("u"), col("b").as("v"))
-      .unionAll(und0.select(col("b").as("u"), col("a").as("v")))
+    val e = bothDirections(undirectedEdges(edges, srcCol, dstCol))
       .localCheckpoint(true)
     var labels = e.select(col("u").as("node")).distinct()
       .withColumn("label", col("node")).localCheckpoint(true)
@@ -1072,10 +1021,7 @@ object GraphAlgos {
     */
   def clusteringCoefficient(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame = {
-    val und = edges.select(
-      least(col(srcCol).cast("string"), col(dstCol).cast("string")).as("a"),
-      greatest(col(srcCol).cast("string"), col(dstCol).cast("string")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
+    val und = undirectedEdges(edges, srcCol, dstCol)
     val deg = und.select(col("a").as("node")).unionAll(und.select(col("b")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
     val tri = triangleCounts(edges, srcCol, dstCol)
@@ -1114,11 +1060,7 @@ object GraphAlgos {
     // anti-join) — materialize the distinct edge set once, the same
     // "adjacency list is an index you build once" shape a real link-
     // prediction pass uses at scale
-    val und = edges.select(
-      least(col(srcCol).cast("string"), col(dstCol).cast("string")).as("a"),
-      greatest(col(srcCol).cast("string"), col(dstCol).cast("string")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val und = undirectedEdges(edges, srcCol, dstCol).persist(lvlMemDisk)
     val adj = und.unionAll(und.select(col("b").as("a"), col("a").as("b")))
     val deg = adj.groupBy(col("a").as("w")).agg(count(lit(1)).as("deg"))
     // centers with deg ∈ [2, maxDegree]; quantized contribution per center
@@ -1129,7 +1071,7 @@ object GraphAlgos {
     // aliases carry different projections)
     val wedgeSide = adj.join(centers, adj("a") === centers("w"))
       .select(col("w"), col("b").as("n"), col("_q"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(lvlMemDisk)
     val pairs = wedgeSide.as("x").join(wedgeSide.as("y"),
       col("x.w") === col("y.w") && col("x.n") < col("y.n"))
       .select(col("x.n").as("a"), col("y.n").as("b"), col("x._q").as("_q"))
@@ -1169,10 +1111,9 @@ object GraphAlgos {
     */
   private def walkEdges(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame =
-    edges.select(col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst"))
+    stringEdges(edges, srcCol, dstCol)
       .where(col("src") =!= col("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(lvlMemDisk)
 
   def randomWalks(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: Seq[String], steps: Int, walksPerSeed: Int = 1): DataFrame = {
@@ -1304,12 +1245,11 @@ object GraphAlgos {
   def hyperBall(edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // string-keyed (dictionary encoding measured and rejected — see kCore;
-    // the registers are md5(node string)-derived either way)
+    // string-keyed like the other undirected loops; the registers are
+    // md5(node string)-derived either way
     val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
       .unionByName(edges.select(col(dstCol).as("u"), col(srcCol).as("v")))
-      .distinct().persist(lvl)
+      .distinct().persist(lvlMemDisk)
     val nodes = e.select(col("u").as("node")).distinct()
     // registers ride a 256-byte VECTOR per node aggregated by the native
     // map-side-combining HllRegisterMerge — each round's exchange carries
@@ -1535,7 +1475,6 @@ object GraphAlgos {
     */
   def linkPredictionAuc(pairs: DataFrame, aCol: String, bCol: String,
       evalCap: Int = 5000): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // the canonical pair frame feeds FIVE downstream branches
     // (test/train/nodes/eSub/adj); localCheckpoint — not persist — both
     // materializes it once (a lazy persist lets concurrent stages of the
@@ -1548,11 +1487,7 @@ object GraphAlgos {
     // sf0.1 isolated median 16.6 s → 9.9 s on the build host; the
     // remaining floor is the pair build + canonical distinct itself
     // (~3 s warm), which is inherent input construction.
-    val e = pairs.select(col(aCol).cast("string").as("_x"),
-        col(bCol).cast("string").as("_y"))
-      .select(least(col("_x"), col("_y")).as("a"),
-        greatest(col("_x"), col("_y")).as("b"))
-      .where(col("a") =!= col("b")).distinct().localCheckpoint(true)
+    val e = undirectedEdges(pairs, aCol, bCol).localCheckpoint(true)
     val h = md5(concat_ws(":", lit("h"), col("a"), col("b")))
     val tag = substring(h, 1, 2)
     // eval set: the held-out 10%, CAPPED deterministically (smallest full
@@ -1561,7 +1496,7 @@ object GraphAlgos {
     val test = e.withColumn("_h", h).where(tag < "1a")
       .orderBy("_h", "a", "b").limit(evalCap)
       .select("a", "b") // ≤ evalCap rows; checkpointed via ev below
-    val train = e.where(!(tag < "1a")).persist(lvl)
+    val train = e.where(!(tag < "1a")).persist(lvlMemDisk)
     // negative sample: non-edges among the 200 smallest-md5 nodes. The
     // anti-join only needs edges whose BOTH endpoints fall in that node
     // set — two broadcast semi-joins shrink the full edge frame to the
@@ -1669,17 +1604,14 @@ object GraphAlgos {
   def richClub(edges: DataFrame, srcCol: String, dstCol: String,
       ks: Seq[Int]): DataFrame = {
     require(ks.nonEmpty, "need at least one threshold")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val dir = edges.select(col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst"))
-    val e = dir.select(explode(array(
+    val e = stringEdges(edges, srcCol, dstCol).select(explode(array(
         struct(col("src"), col("dst")),
         struct(col("dst").as("src"), col("src").as("dst")))).as("_e"))
       .select(col("_e.src").as("a"), col("_e.dst").as("b"))
       .where(col("a") =!= col("b")).distinct()
-      .persist(lvl) // both directions: degree = row count per node
+      .persist(lvlMemDisk) // both directions: degree = row count per node
     val deg = e.groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))
-      .persist(lvl)
+      .persist(lvlMemDisk)
     val kDf = broadcast(e.sparkSession.createDataFrame(
       ks.map(Tuple1(_))).toDF("k"))
     val nRich = deg.crossJoin(kDf).where(col("deg") > col("k"))
@@ -1750,16 +1682,13 @@ object GraphAlgos {
       deltaScale: Long = 1000000L,
       broadcastFrontier: Boolean = true): DataFrame = {
     require(seeds.nonEmpty && maxDepth >= 1, "need seeds and maxDepth >= 1")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val dir = edges.select(col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst"))
-    // string-keyed (dictionary encoding measured and rejected — see kCore)
+    val dir = stringEdges(edges, srcCol, dstCol)
     val e = (if (undirected)
       dir.select(explode(array(
           struct(col("src"), col("dst")),
           struct(col("dst").as("src"), col("src").as("dst")))).as("_e"))
         .select(col("_e.src").as("src"), col("_e.dst").as("dst"))
-      else dir).distinct().persist(lvl)
+      else dir).distinct().persist(lvlMemDisk)
     e.count(): Unit
     val spark = edges.sparkSession
     import spark.implicits._
@@ -1870,16 +1799,10 @@ object GraphAlgos {
       iterations: Int, unit: Long = 1000000L,
       broadcastNodeLimit: Long = 1000000L): DataFrame = {
     require(iterations >= 1, "need at least one iteration")
-    // eager localCheckpoint, not persist — see pageRankFixed
-    val eStr = edges.select(col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst")).distinct().localCheckpoint(true)
-    // long-keyed loop via the node dictionary — see pageRankFixed
-    val dict = nodeDict(eStr.select(col("src").as("node"))
-      .union(eStr.select(col("dst"))).distinct())
-    val n = dict.count()
-    require(n > 0, "HITS needs at least one edge") // n>0 ⟺ e nonempty
-    val bcOk = n <= broadcastNodeLimit
-    val e = encodeEdges(eStr, dict, bcOk).localCheckpoint(true)
+    val g = directed(stringEdges(edges, srcCol, dstCol).distinct(),
+      broadcastNodeLimit, "hitsFixed")
+    require(g.n > 0, "HITS needs at least one edge") // n>0 ⟺ e nonempty
+    val e = g.e
     // score frames stay SPARSE inside the loop (only nodes that received
     // mass — a node absent from a frame has score 0, and joining it in
     // would only add per-half-step node-table traffic); the dense frame is
@@ -1887,7 +1810,7 @@ object GraphAlgos {
     // broadcast under the limit, so the big cached edge frame NEVER
     // re-shuffles — the only exchange per half-step is the map-side
     // combined (node, partial-sum) aggregate.
-    def bc(df: DataFrame): DataFrame = if (bcOk) broadcast(df) else df
+    def bc(df: DataFrame): DataFrame = if (g.bc) broadcast(df) else df
     var normIdx = 0
     def normalize(raw: DataFrame, outCol: String): DataFrame = {
       // ONE pass per half-step: the raw sums are materialized by the eager
@@ -1897,9 +1820,13 @@ object GraphAlgos {
       // scaled projection is then a cheap map over the checkpointed n-row
       // frame with the total as a literal
       normIdx += 1
-      val obs = org.apache.spark.sql.Observation(s"hits_norm_$normIdx")
+      val obs = Observation(s"hits_norm_$normIdx")
       val r = raw.observe(obs, sum(col("v")).as("t")).localCheckpoint(true)
+      // a null total (empty half-step) unboxes to 0 here
       val t = obs.get("t").asInstanceOf[Long]
+      require(t > 0, s"hitsFixed: the $outCol half-step of iteration " +
+        s"${(normIdx + 1) / 2} has a zero score total (every score floored " +
+        s"to 0 at unit $unit)")
       r.select(col("node"), expr(s"(v * ${unit}L) div ${t}L").as(outCol))
     }
     var hubs = e.select(col("src").as("node")).distinct()
@@ -1913,7 +1840,7 @@ object GraphAlgos {
         .groupBy(col("src").as("node")).agg(sum("authority").as("v"))
       hubs = normalize(hraw, "hub")
     }
-    val out = dict.select(col("nid").as("node"), col("node").as("_str"))
+    val out = g.dict.select(col("nid").as("node"), col("node").as("_str"))
       .join(auths, Seq("node"), "left").join(hubs, Seq("node"), "left")
       .select(col("_str").as("node"),
         coalesce(col("authority"), lit(0L)).as("authority"),
@@ -1966,7 +1893,7 @@ object GraphAlgos {
     */
   def butterflyCensus(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
     val e = edges.select(col(aCol).as("_a"), col(bCol).as("_b")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(lvlMemDisk)
     val wedges = e.as("x").join(e.as("y"),
         col("x._a") === col("y._a") && col("x._b") < col("y._b"))
       .select(col("x._b").as("b1"), col("y._b").as("b2"))
@@ -2015,17 +1942,13 @@ object GraphAlgos {
     */
   def communityQuality(edges: DataFrame, srcCol: String, dstCol: String,
       communities: DataFrame, nodeCol: String, commCol: String): DataFrame = {
-    val e = edges.select(
-        least(col(srcCol).cast("string"), col(dstCol).cast("string")).as("a"),
-        greatest(col(srcCol).cast("string"), col(dstCol).cast("string")).as("b"))
-      .where(col("a") =!= col("b"))
-      .distinct()
+    val e = undirectedEdges(edges, srcCol, dstCol)
     val cm = communities.select(col(nodeCol).cast("string").as("node"),
       col(commCol).cast("string").as("community")).distinct()
     val tagged = e
       .join(cm.withColumnRenamed("node", "a").withColumnRenamed("community", "ca"), Seq("a"))
       .join(cm.withColumnRenamed("node", "b").withColumnRenamed("community", "cb"), Seq("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(lvlMemDisk)
     val m = tagged.count()
     require(m > 0, "graph has no edges after canonicalization")
     // per-community: intra edges (both endpoints inside) and cut edges
@@ -2133,16 +2056,11 @@ object GraphAlgos {
   def sccFixed(edges: DataFrame, srcCol: String, dstCol: String,
       peelRounds: Int, propRounds: Int): DataFrame = {
     require(peelRounds >= 1 && propRounds >= 1, "rounds must be >= 1")
-    val persistL = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // string-keyed (dictionary encoding measured and rejected — see kCore;
-    // SCC would additionally need the order-preserving dictionary, since
-    // min-label agreement compares keys)
-    val e0 = edges.select(col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst"))
+    val e0 = stringEdges(edges, srcCol, dstCol)
       .where(col("src") =!= col("dst")).distinct()
-      .persist(persistL)
+      .persist(lvlMemDisk)
     val allNodes = e0.select(col("src").as("node"))
-      .union(e0.select(col("dst"))).distinct().persist(persistL)
+      .union(e0.select(col("dst"))).distinct().persist(lvlMemDisk)
     var rem = allNodes
     var assigned: DataFrame = null
     var done = false
@@ -2151,7 +2069,7 @@ object GraphAlgos {
       val re0 = e0
         .join(rem.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
         .join(rem.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-        .persist(persistL)
+        .persist(lvlMemDisk)
       // trim: a multi-node SCC needs in AND out edges inside the remaining
       // subgraph (SCCs are always removed whole), so any node missing
       // either side is a singleton SCC — this collapses DAG tails/chains
@@ -2167,24 +2085,23 @@ object GraphAlgos {
       val re = re0
         .join(rem.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
         .join(rem.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-        .persist(persistL)
+        .persist(lvlMemDisk)
       re0.unpersist(blocking = false)
+      // the min label flowing into each node along `from` → `to` edges
+      def minIn(l: DataFrame, from: String, to: String): DataFrame =
+        re.join(l.withColumnRenamed("node", from), Seq(from))
+          .groupBy(col(to).as("node")).agg(min("lbl").as("_in"))
+      def step(l: DataFrame, from: String, to: String): DataFrame =
+        l.join(minIn(l, from, to), Seq("node"), "left")
+          .select(col("node"), least(col("lbl"),
+            coalesce(col("_in"), col("lbl"))).as("lbl"))
+          .localCheckpoint(true)
       // fmin: min id reachable FROM u — labels flow AGAINST edge direction
       var f = rem.withColumn("lbl", col("node"))
       var b = rem.withColumn("lbl", col("node"))
       for (_ <- 1 to propRounds) {
-        val fIn = re.join(f.withColumnRenamed("node", "dst"), Seq("dst"))
-          .groupBy(col("src").as("node")).agg(min("lbl").as("_in"))
-        f = f.join(fIn, Seq("node"), "left")
-          .select(col("node"), least(col("lbl"),
-            coalesce(col("_in"), col("lbl"))).as("lbl"))
-          .localCheckpoint(true)
-        val bIn = re.join(b.withColumnRenamed("node", "src"), Seq("src"))
-          .groupBy(col("dst").as("node")).agg(min("lbl").as("_in"))
-        b = b.join(bIn, Seq("node"), "left")
-          .select(col("node"), least(col("lbl"),
-            coalesce(col("_in"), col("lbl"))).as("lbl"))
-          .localCheckpoint(true)
+        f = step(f, "dst", "src")
+        b = step(b, "src", "dst")
       }
       // convergence probe: one extra half-step per direction. If any label
       // can still improve, this peel's agreement may cover only PART of an
@@ -2194,16 +2111,12 @@ object GraphAlgos {
       // sound even truncated (f=b=L proves L both reaches and is reached by
       // the node), so assign what agrees, then stop peeling and '?'-mark
       // everything left rather than guess.
-      val fProbe = re.join(f.withColumnRenamed("node", "dst"), Seq("dst"))
-        .groupBy(col("src").as("node")).agg(min("lbl").as("_in"))
-        .join(f, Seq("node"))
-        .where(col("_in") < col("lbl")).select(lit(1).as("_x"))
-      val bProbe = re.join(b.withColumnRenamed("node", "src"), Seq("src"))
-        .groupBy(col("dst").as("node")).agg(min("lbl").as("_in"))
-        .join(b, Seq("node"))
-        .where(col("_in") < col("lbl")).select(lit(1).as("_x"))
+      def probe(l: DataFrame, from: String, to: String): DataFrame =
+        minIn(l, from, to).join(l, Seq("node"))
+          .where(col("_in") < col("lbl")).select(lit(1).as("_x"))
       // one job probes both directions
-      val converged = fProbe.unionAll(bProbe).limit(1).count() == 0
+      val converged = probe(f, "dst", "src").unionAll(probe(b, "src", "dst"))
+        .limit(1).count() == 0
       val agree = f.withColumnRenamed("lbl", "_f")
         .join(b.withColumnRenamed("lbl", "_b"), Seq("node"))
         .where(col("_f") === col("_b"))
@@ -2311,7 +2224,7 @@ object GraphAlgos {
     require(window >= 1, "window must be >= 1")
     // the walk corpus feeds BOTH sides of the self-join — persist it, or
     // an expensive upstream walk generation re-runs per branch
-    val w = walks.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val w = walks.persist(lvlMemDisk)
     val a = w.select(col("walk_id"), col("step").as("_sa"),
       col("node").as("center"))
     val b = w.select(col("walk_id"), col("step").as("_sb"),

@@ -5,6 +5,76 @@ import graft.SparkSpec
 /** Fixed-point PageRank. */
 class GraphAlgosSpec extends SparkSpec {
 
+  /** A small fixed graph for exact-output pins: a parallel a→b pair (weights
+    * 2 and 3, times 1 and 5), a self-loop on c, a dangling sink e, and two
+    * symmetric sources d and g that tie on every score.
+    */
+  private def pinned = {
+    import spark.implicits._
+    Seq(("a", "b", 2L, 1L), ("a", "b", 3L, 5L), ("a", "c", 1L, 2L),
+      ("b", "c", 1L, 3L), ("c", "a", 4L, 4L), ("c", "c", 1L, 6L),
+      ("c", "e", 1L, 7L), ("d", "c", 2L, 2L), ("g", "c", 2L, 3L))
+      .toDF("s", "t", "w", "ts")
+  }
+
+  private def longRows(df: org.apache.spark.sql.DataFrame): Seq[(String, Long)] =
+    df.collect().map(r => r.getString(0) -> r.getLong(1)).toSeq.sortBy(_._1)
+
+  test("pinned output: pageRankFixed") {
+    assert(longRows(GraphAlgos.pageRankFixed(pinned, "s", "t", 4)) == Seq(
+      "a" -> 107272206143L, "b" -> 76639139657L, "c" -> 289835448806L,
+      "d" -> 24999999999L, "e" -> 107272206143L, "g" -> 24999999999L))
+  }
+
+  test("pinned output: weightedPageRankFixed") {
+    assert(longRows(GraphAlgos.weightedPageRankFixed(pinned, "s", "t", "w", 4))
+      == Seq("a" -> 162863200868L, "b" -> 153675636569L, "c" -> 333645564870L,
+        "d" -> 24999999999L, "e" -> 59465800216L, "g" -> 24999999999L))
+  }
+
+  test("pinned output: personalizedPageRankFixed") {
+    assert(longRows(GraphAlgos.personalizedPageRankFixed(pinned, "s", "t",
+      Seq("a", "d", "absent"), 4)) == Seq(
+      "a" -> 112131655090L, "b" -> 57926909721L, "c" -> 224121585643L,
+      "d" -> 49999999999L, "e" -> 62131655091L, "g" -> 0L))
+  }
+
+  test("pinned output: hitsFixed") {
+    val h = GraphAlgos.hitsFixed(pinned, "s", "t", 3).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq.sortBy(_._1)
+    assert(h == Seq(("a", 151078L, 211328L), ("b", 122301L, 174292L),
+      ("c", 575540L, 265794L), ("d", 0L, 174292L), ("e", 151078L, 0L),
+      ("g", 0L, 174292L)))
+  }
+
+  test("pinned output: temporalReachability") {
+    assert(longRows(GraphAlgos.temporalReachability(pinned, "s", "t", "ts",
+      "a", startTime = 1L, maxHops = 4)) ==
+      Seq("a" -> 1L, "b" -> 1L, "c" -> 2L, "e" -> 7L))
+  }
+
+  test("a null endpoint fails the dictionary and relaxation loops loudly") {
+    import spark.implicits._
+    val e = Seq(("a", "b", 1L), ("b", "a", 1L), ("a", null, 1L))
+      .toDF("s", "t", "w")
+    val pr = intercept[IllegalArgumentException](
+      GraphAlgos.pageRankFixed(e, "s", "t", 2))
+    assert(pr.getMessage.contains("null endpoint"), pr.getMessage)
+    val sp = intercept[IllegalArgumentException](
+      GraphAlgos.shortestPathsFixed(e, "s", "t", "w", "a", maxHops = 2))
+    assert(sp.getMessage.contains("null node"), sp.getMessage)
+  }
+
+  test("hitsFixed fails loudly when every score floors to a zero total") {
+    import spark.implicits._
+    // unit 1 split over two authorities floors both to 0, so the next hub
+    // half-step has nothing to normalize by
+    val e = Seq(("a", "b"), ("a", "c")).toDF("s", "t")
+    val err = intercept[IllegalArgumentException](
+      GraphAlgos.hitsFixed(e, "s", "t", 2, unit = 1L))
+    assert(err.getMessage.contains("hub half-step"), err.getMessage)
+  }
+
   test("symmetric 2-cycle keeps equal ranks summing to ~scale") {
     import spark.implicits._
     val e = Seq(("a", "b"), ("b", "a")).toDF("s", "t")
